@@ -7,6 +7,8 @@ Replicates the driver's check shape: for every query in oracle_sql.json
 (or the subset given), run the DuckDB SQL over the sf parquet tables, read
 the Spark dump, sort columns by name and rows by all columns, compare cell
 by cell (floats bit-exact via struct pack, like a hash would be).
+A requested query that has no oracle SQL counts as a failure, and the
+script exits non-zero when no query was compared.
 """
 import sys, json, glob, os
 import duckdb
@@ -22,6 +24,8 @@ def main():
                     if os.path.isdir(t) else
                     f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{t}')")
     n_pass = n_fail = 0
+    for q in sorted((subset or set()) - set(oracle)):
+        print(f"{q}: NOT in oracle_sql.json"); n_fail += 1
     for q in sorted(oracle):
         if subset and q not in subset:
             continue
@@ -52,6 +56,8 @@ def main():
         else:
             print(f"{q}: ok ({orc.num_rows} rows)"); n_pass += 1
     print(f"== {n_pass} pass, {n_fail} fail ==")
-    sys.exit(1 if n_fail else 0)
+    if n_pass == 0:
+        print("nothing was compared")
+    sys.exit(1 if n_fail or n_pass == 0 else 0)
 
 main()

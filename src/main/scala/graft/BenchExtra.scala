@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Optimization-round helper bench (guide §1.4/§1.5): NOT the driver
@@ -8,6 +10,9 @@ import org.apache.spark.sql.SparkSession
   *  - records /proc/loadavg before/after each query so a contaminated
   *    window is identifiable from the artifact alone,
   *  - optionally dumps .explain("formatted") per query to a directory.
+  * A query whose run throws stops at that iteration, prints
+  * `FAILED: <reason>` instead of timings and stays out of TOTAL(min), so a
+  * failure never reads as a fast time.
   *
   * Usage:
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
@@ -27,6 +32,7 @@ object BenchExtra {
       else SparkEntry.queries.keySet
     val explainDir = if (args.length > 1 && args(1).nonEmpty && args(1) != "-") Some(args(1)) else None
     val iters = if (args.length > 2) args(2).toInt else 3
+    require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -49,20 +55,27 @@ object BenchExtra {
           java.nio.file.Files.writeString(java.nio.file.Paths.get(d, s"$name.txt"), plan)
         }
         val la0 = loadavg()
-        val ts = (1 to iters).map { _ =>
+        val ts = scala.collection.mutable.ArrayBuffer.empty[Double]
+        var failure: Option[String] = None
+        while (failure.isEmpty && ts.length < iters) {
           val t0 = System.nanoTime()
-          val err = try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
-                    catch { case e: Throwable => Some(e.getClass.getSimpleName + ": " + e.getMessage) }
-          err.foreach(m => System.err.println(s"[benchextra] $name FAILED: $m"))
-          (System.nanoTime() - t0) / 1e9
+          try {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            ts += (System.nanoTime() - t0) / 1e9
+          } catch { case NonFatal(e) => failure = Some(e.getClass.getSimpleName + ": " + e.getMessage) }
         }
         val la1 = loadavg()
-        (name, ts, la0, la1)
+        (name, ts.toSeq, failure, la0, la1)
       }
-    results.foreach { case (name, ts, la0, la1) =>
-      println(f"$name%-28s min=${ts.min}%8.3f med=${ts.sorted.apply(ts.length / 2)}%8.3f all=[${ts.map(t => f"$t%.3f").mkString(", ")}] load0=$la0 load1=$la1")
+    results.foreach {
+      case (name, _, Some(reason), la0, la1) =>
+        println(f"$name%-28s FAILED: $reason load0=$la0 load1=$la1")
+      case (name, ts, None, la0, la1) =>
+        println(f"$name%-28s min=${ts.min}%8.3f med=${ts.sorted.apply(ts.length / 2)}%8.3f all=[${ts.map(t => f"$t%.3f").mkString(", ")}] load0=$la0 load1=$la1")
     }
-    println(s"TOTAL(min) ${results.map(_._2.min).sum}")
+    val failed = results.count(_._3.isDefined)
+    println(s"TOTAL(min) ${results.filter(_._3.isEmpty).map(_._2.min).sum}")
+    if (failed > 0) println(s"FAILED $failed of ${results.length} queries (left out of TOTAL)")
     spark.stop()
   }
 }

@@ -15,17 +15,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Streaming makes.
   */
 object StreamOps {
-  /** Scale-adaptive stateful-shuffle sizing: a streaming query's state /
-    * aggregation partition count is pinned at query start from
-    * `spark.sql.shuffle.partitions` (AQE is disabled in streaming), so a
-    * constant tuned for either local mode or the cluster is wrong at the
-    * other scale. Derive it from the INPUT volume — ≈64 MB of source per
-    * partition, floored at 1, capped at the session's parallelism: a
-    * 100 TB stream saturates to cluster parallelism (production behavior
-    * unchanged), while a small micro-batch stops paying one state-store
-    * commit + task per configured partition per trigger (guide §2.2).
-    * These one-shot queries use fresh checkpoints, so the per-run choice
-    * never conflicts with a prior run's pinned partitioning. */
   /** Source schema with a per-JVM (path, mtime) cache: six streaming
     * operators each re-read the same static source's parquet footers just
     * to declare the stream schema — metadata only, invalidated on file
@@ -39,12 +28,32 @@ object StreamOps {
     schemaCache.computeIfAbsent((path, mtime), _ => spark.read.parquet(path).schema)
   }
 
+  /** Scale-adaptive stateful-shuffle sizing: a streaming query's state /
+    * aggregation partition count is pinned at query start from
+    * `spark.sql.shuffle.partitions` (AQE is disabled in streaming), so a
+    * constant tuned for either local mode or the cluster is wrong at the
+    * other scale. Derive it from the INPUT volume — ≈64 MB of source per
+    * partition, capped at the session's parallelism: a 100 TB stream
+    * saturates to cluster parallelism (production behavior unchanged),
+    * while a small micro-batch stops paying one state-store commit + task
+    * per configured partition per trigger. The size comes from the Hadoop
+    * FileSystem of the path, so hdfs:// and s3:// inputs are sized too; an
+    * input whose size is unknown or 0 gets the full parallelism. */
+  private[engine] def inputShufflePartitions(spark: SparkSession, path: String): Int = {
+    val parallelism = spark.sparkContext.defaultParallelism
+    val bytes = try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
+    } catch { case _: java.io.IOException => 0L }
+    if (bytes <= 0) parallelism
+    else math.min(parallelism.toLong, bytes / (64L << 20) + 1).toInt
+  }
+
+  /** Runs `body` with the shuffle partitions sized from the input at
+    * `path`. These one-shot queries use fresh checkpoints, so the per-run
+    * choice never conflicts with a prior run's pinned partitioning. */
   private def withInputSizedShuffle[T](spark: SparkSession, path: String)(body: => T): T = {
-    def sizeOf(f: java.io.File): Long =
-      if (f.isDirectory) f.listFiles().map(sizeOf).sum else f.length()
-    val bytes = sizeOf(new java.io.File(path))
-    val parts = math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong,
-      bytes / (64L << 20) + 1))
+    val parts = inputShufflePartitions(spark, path)
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
     try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)

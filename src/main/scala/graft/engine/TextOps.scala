@@ -11,7 +11,12 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
   val MinhashK = 16   // signature length
-  val Bands = 4       // LSH bands of 4 rows each
+  /** LSH bands of 4 rows each. Every signature component derives from one
+    * masked minimum (see [[sigFromMaskedMin]]), so the 4 band keys collide
+    * exactly when that single minimum collides: candidate recall is that
+    * of one MinHash, not of 4 independent bands. The oracle SQL's affine
+    * family has the same property. */
+  val Bands = 4
   val JaccardThreshold = 0.8
   /** Band-bucket size cap: a band key shared by more than this many docs is
     * boilerplate (e.g. a fixed header shingled into every page), not a

@@ -23,6 +23,9 @@ class DualPathSpec extends AnyFunSuite with PropHelper {
     val rows = q("q15_s2_cells").collect()
     assert(rows.nonEmpty)
     assert(rows.forall(_.getAs[Boolean]("rt_ok")), "s2 round-trip violation")
+    rows.foreach { r =>
+      assert(graft.core.S2U.parent(r.getAs[Long]("s2"), 8) == r.getAs[Long]("s2_parent"))
+    }
   }
 
   test("q20 image tiles: every point inside its tile's decoded bbox") {
@@ -61,17 +64,31 @@ class DualPathSpec extends AnyFunSuite with PropHelper {
     }
   }
 
-  test("q47 h3 cells: center round trip ≥99% (face-edge cells documented); parents consistent") {
+  test("q47 h3 cells: EXACT center round trip on every row; parents consistent") {
     val rows = q("q47_h3_cells").collect()
     assert(rows.nonEmpty)
-    val rtRate = rows.count(_.getAs[Boolean]("rt_ok")).toDouble / rows.length
-    assert(rtRate >= 0.99, s"h3 center round-trip rate $rtRate")
+    assert(rows.forall(_.getAs[Boolean]("rt_ok")), "h3 center round-trip must be exact")
     rows.foreach { r =>
       val h3 = r.getAs[Long]("h3"); val p = r.getAs[Long]("h3_parent")
-      assert(graft.core.H3Ico.parent(h3, 3) == p)
-      assert(graft.core.H3Ico.resolution(p) == 3)
+      assert(graft.core.H3U.cellToParent(h3, 3) == p)
+      assert(graft.core.H3U.resolution(p) == 3)
     }
-    assert(q("q48_h3_cell_join").count() > 0)
+  }
+
+  test("q48 h3 cell join: equals a driver-side group-and-join on H3U cells") {
+    def cellCounts(table: String, key: String): Map[Long, Long] =
+      graft.engine.SpatialOps.withDerivedPosition(
+        spark.read.parquet(s"$sf/$table.parquet").select(key), key)
+        .collect()
+        .groupBy(r => graft.core.H3U.latLngToCell(r.getDouble(2), r.getDouble(1), 4))
+        .map { case (h3, rs) => h3 -> rs.length.toLong }
+    val cust = cellCounts("customer", "c_custkey")
+    val supp = cellCounts("supplier", "s_suppkey")
+    val expect = cust.keySet.intersect(supp.keySet).map(h => (h, cust(h), supp(h)))
+    val got = q("q48_h3_cell_join").collect()
+      .map(r => (r.getAs[Long]("h3"), r.getAs[Long]("n_cust"), r.getAs[Long]("n_supp")))
+    assert(expect.nonEmpty)
+    assert(got.length == expect.size && got.toSet == expect)
   }
 
   test("q55 h3u cells: EXACT center round trip on every row; goldens + parents bit-compatible") {

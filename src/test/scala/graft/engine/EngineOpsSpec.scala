@@ -84,6 +84,18 @@ class EngineOpsSpec extends AnyFunSuite {
     assert(coarse.count() >= exact.count())
   }
 
+  test("stream sizing: small input → 1 partition; unsizable → parallelism") {
+    // both stream sources are far below 64 MB: one partition, as before
+    // sizing went through the Hadoop FileSystem; a scheme-qualified path
+    // is sized the same way
+    Seq(s"$sf/events.parquet", s"$sf/documents.parquet", s"file://$sf/events.parquet")
+      .foreach(p => assert(StreamOps.inputShufflePartitions(spark, p) == 1, p))
+    val empty = java.nio.file.Files.createTempDirectory("stream_sizing").toString
+    Seq(empty, s"$empty/missing.parquet").foreach { p =>
+      assert(StreamOps.inputShufflePartitions(spark, p) == spark.sparkContext.defaultParallelism, p)
+    }
+  }
+
   test("streamed window agg == batch group by") {
     val streamed = StreamOps.streamedWindowAgg(spark, s"$sf/events.parquet")
     val batch = spark.read.parquet(s"$sf/events.parquet")

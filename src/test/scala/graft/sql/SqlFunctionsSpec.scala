@@ -119,33 +119,36 @@ class SqlFunctionsSpec extends AnyFunSuite {
     assert(dyn.map(_.getBoolean(0)).toSeq == got.map(_.getBoolean(2)).toSeq)
   }
 
-  test("h3_* expressions match graft.core.H3Ico (Column API and SQL)") {
-    import graft.core.H3Ico
+  test("h3u_* expressions match graft.core.H3U (Column API and SQL)") {
+    import graft.core.H3U
     val got = pts
-      .withColumn("h3", gf.h3_cell($"lon", $"lat", 5))
-      .withColumn("p3", gf.h3_parent($"h3", 3))
-      .withColumn("vx", gf.h3_is_vertex($"h3"))
-      .withColumn("res", gf.h3_resolution($"h3"))
-      .withColumn("c", gf.h3_center($"h3"))
-      .withColumn("nbrs", gf.h3_neighbors($"h3"))
-      .withColumn("disk", gf.h3_disk($"h3", 2))
-      .withColumn("tok", gf.h3_token($"h3"))
+      .withColumn("h3", gf.h3u_cell($"lon", $"lat", 5))
+      .withColumn("p3", gf.h3u_parent($"h3", 3))
+      .withColumn("pent", gf.h3u_is_pentagon($"h3"))
+      .withColumn("res", gf.h3u_resolution($"h3"))
+      .withColumn("c", gf.h3u_center($"h3"))
+      .withColumn("disk", gf.h3u_disk($"h3", 2))
+      .withColumn("tok", gf.h3u_token($"h3"))
       .orderBy("id").collect()
     got.foreach { r =>
-      val expect = H3Ico.cellId(r.getDouble(1), r.getDouble(2), 5)
+      val expect = H3U.latLngToCell(r.getDouble(2), r.getDouble(1), 5)
       assert(r.getLong(3) == expect)
-      assert(r.getLong(4) == H3Ico.parent(expect, 3))
-      assert(r.getBoolean(5) == H3Ico.isVertexCell(expect))
+      assert(r.getLong(4) == H3U.cellToParent(expect, 3))
+      assert(r.getBoolean(5) == H3U.isPentagon(expect))
       assert(r.getInt(6) == 5)
-      val (clon, clat) = H3Ico.center(expect)
+      val (clat, clon) = H3U.cellToLatLng(expect)
       assert(r.getStruct(7).getDouble(0) == clon && r.getStruct(7).getDouble(1) == clat)
-      assert(r.getSeq[Long](8) == H3Ico.neighbors(expect).toSeq)
-      assert(r.getSeq[Long](9) == H3Ico.disk(expect, 2).toSeq)
-      assert(r.getString(10) == H3Ico.token(expect))
+      assert(r.getSeq[Long](8) == H3U.gridDisk(expect, 2).toSeq)
+      assert(r.getString(9) == H3U.token(expect))
     }
     pts.createOrReplaceTempView("h3pts")
-    val sql = spark.sql("SELECT id, h3_cell(lon, lat, 5) AS h3 FROM h3pts ORDER BY id").collect()
-    sql.zip(got).foreach { case (s, g) => assert(s.getLong(1) == g.getLong(3)) }
+    val sql = spark.sql(
+      """SELECT id, lon, lat, h3, h3u_parent(h3, 3), h3u_is_pentagon(h3), h3u_resolution(h3),
+        |       h3u_center(h3), h3u_disk(h3, 2), h3u_token(h3)
+        |FROM (SELECT *, h3u_cell(lon, lat, 5) AS h3 FROM h3pts) ORDER BY id""".stripMargin).collect()
+    assert(sql.toSeq == got.toSeq)
+    // h3u_*/s2u_* are the only H3 and S2 functions
+    assert(!GraftFunctions.all.exists(f => Seq("h3_", "s2_").exists(f._1.funcName.startsWith)))
   }
 
   test("s2u_* / h3u_polyfill_wkt expressions match the core library") {
