@@ -447,7 +447,7 @@ object SparkEntry {
       graft.engine.TextOps.minhashLshPairs(ld(s, dir, "documents"), "doc_id", "text")
     },
     "q67_stream_neardup" -> gq { (s, dir) =>
-      // ingest-time LSH near-dup: band-bucket keyed flatMapGroupsWithState
+      // ingest-time LSH near-dup: bucket-keyed flatMapGroupsWithState
       // emits candidate pairs as documents stream in (capped per-bucket
       // state, first-seen-wins); exact jaccard then verifies against the
       // stored corpus — over one static batch this equals q32, so the

@@ -98,10 +98,10 @@ object AnnOps {
     rankTopK(perQuery, k)
   }
 
-  /** Collect the coarse quantizer: the first nCentroids vectors by id,
-    * widened float→double exactly as the in-plan cast does. Bounded — the
-    * quantizer always fits in driver memory (it is broadcast as literals
-    * into every probe/assignment expression). */
+  /** Collect the coarse quantizer: the vectors with ids 0 until
+    * nCentroids, widened float→double exactly as the in-plan cast does.
+    * Bounded — the quantizer always fits in driver memory (it is broadcast
+    * as literals into every probe/assignment expression). */
   private def collectCentroids(emb: DataFrame, idCol: String, embCol: String,
                                nCentroids: Int): Array[(Long, Array[Double])] = {
     val cents = emb.where(col(idCol) < nCentroids)
@@ -109,7 +109,9 @@ object AnnOps {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
-    require(cents.length == nCentroids, s"expected $nCentroids centroid rows")
+    require(cents.length == nCentroids,
+      s"IVF quantizer needs $nCentroids centroid rows, one vector for each " +
+      s"$idCol in 0 until $nCentroids; found ${cents.length}")
     cents
   }
 
@@ -153,6 +155,8 @@ object AnnOps {
     * written partitioned by cent_id (same layout trick as the tile index)
     * so probes prune at file level. Fully SQL-expressible, so unlike the
     * SRP-LSH variant this one is oracle-checked hash-exact (q41).
+    * Precondition: `emb` holds exactly one vector for each id in
+    * 0 until nCentroids (else IllegalArgumentException).
     * Output (qid, rnk, vec_id, cosine). */
   def annIvf(emb: DataFrame, idCol: String, embCol: String, dim: Int,
              nQueries: Int, k: Int, nCentroids: Int = 8, nProbe: Int = 2): DataFrame = {
@@ -178,7 +182,9 @@ object AnnOps {
     * table with `ivf.*` properties recorded in the manifest. This is the
     * "at scale" half of the IVF design made real: with inverted lists as
     * partitions, a probe reads only its lists' FILES — the same
-    * file-listing-time pruning the spatial tile indexes get. */
+    * file-listing-time pruning the spatial tile indexes get. Same
+    * precondition as [[annIvf]]: one vector for each id in
+    * 0 until nCentroids. */
   def writeIvfIndex(emb: DataFrame, idCol: String, embCol: String, dim: Int,
                     table: String, nCentroids: Int = 8): Unit = {
     val centroids = collectCentroids(emb, idCol, embCol, nCentroids)

@@ -10,15 +10,17 @@ import org.apache.spark.sql.functions._
   * RFC 1321), truncated to 60 bits so values stay positive in BIGINT.
   */
 object TextOps {
-  val MinhashK = 16   // signature length
-  /** LSH bands of 4 rows each. Every signature component derives from one
-    * masked minimum (see [[sigFromMaskedMin]]), so the 4 band keys collide
-    * exactly when that single minimum collides: candidate recall is that
-    * of one MinHash, not of 4 independent bands. The oracle SQL's affine
-    * family has the same property. */
+  /** Signature length and band count of the ORACLE's banded MinHash
+    * (OracleSql.minhashLshParts: [[MinhashK]] components from the
+    * [[affineHashSql]] family, [[Bands]] string keys of MinhashK/Bands
+    * components each). The engine does not band: every component is
+    * affine in one masked minimum, so all band keys collide exactly when
+    * that minimum collides and [[lshCandidates]] keys on it alone. Recall is
+    * that of one MinHash, not of Bands independent bands. */
+  val MinhashK = 16
   val Bands = 4
   val JaccardThreshold = 0.8
-  /** Band-bucket size cap: a band key shared by more than this many docs is
+  /** Bucket size cap: a bucket key shared by more than this many docs is
     * boilerplate (e.g. a fixed header shingled into every page), not a
     * near-dup signal, and would make the candidate join quadratic in that
     * bucket at 100 TB. Oversized buckets are EXCLUDED from candidate
@@ -55,90 +57,58 @@ object TextOps {
 
   /** Affine hash family over ONE base md5 hash: h_i = (h & 2^45-1) * a_i + i
     * (odd multipliers; stays < 2^62 so no BIGINT overflow in either engine).
-    * One md5 per shingle instead of k — md5 dominates signature cost. */
+    * One md5 per shingle instead of k — md5 dominates signature cost. Only
+    * the oracle SQL evaluates the family; the engine needs only the mask
+    * (see [[maskedHash]]). */
   val AffineMask = 0x1FFFFFFFFFFFL
-  def affineHash(h: Column, i: Int): Column =
-    (h.bitwiseAND(lit(AffineMask)) * lit(2L * i + 1)) + lit(i.toLong)
   def affineHashSql(h: String, i: Int): String =
     s"(($h & $AffineMask) * ${2L * i + 1} + $i)"
 
-  /** s_i from the single masked minimum: affineHash is STRICTLY MONOTONE in
-    * (h & mask) for every i (positive multiplier, added constant), so
-    * min over shingles of affine(h, i) == affine(min over shingles of
-    * (h & mask), i) — one min instead of [[MinhashK]] of them, bit-identical
-    * signature values (the oracle keeps the explicit per-i min SQL). */
-  private[engine] def sigFromMaskedMin(m: Column, i: Int): Column =
-    m * lit(2L * i + 1) + lit(i.toLong)
+  /** The LSH bucket key's per-shingle hash: a doc's key is the minimum of
+    * this over its shingles. Every affine h_i is strictly monotone in it,
+    * so min h_i == affine(min of this, i) and the oracle's whole banded
+    * signature is a function of that one minimum. */
+  private[engine] def maskedHash(sh: Column): Column =
+    hash60(sh).bitwiseAND(lit(AffineMask))
 
-  /** MinHash signature columns s0..s{k-1}: per member i of the affine hash
-    * family, min over the doc's shingles — computed via ONE `min(h & mask)`
-    * aggregate (see [[sigFromMaskedMin]]): the aggregation buffer and the
-    * shuffle carry one long per doc instead of MinhashK. */
-  def minhashSignatures(shingleDf: DataFrame, idCol: String): DataFrame = {
-    val base = shingleDf.withColumn("_h", hash60(col("sh")))
-    val m = base.groupBy(col(idCol))
-      .agg(min(col("_h").bitwiseAND(lit(AffineMask))).as("_m"))
-    val sigs = (0 until MinhashK).map(i => sigFromMaskedMin(col("_m"), i).as(s"s$i"))
-    m.select(col(idCol) +: sigs: _*)
-  }
-
-  /** LSH candidate pairs (doc_a, doc_b) from banded minhash signatures of a
-    * shingle-set DataFrame, with the [[BandBucketCap]] frequency guard.
+  /** LSH candidate pairs (doc_a, doc_b) of a shingle-set DataFrame, with
+    * the [[BandBucketCap]] frequency guard.
     *
-    * FUSED candidate stage: ONE aggregation pass per (band, key) bucket
-    * gathers the member list with [[graft.sql.CollectCapped]], whose
-    * buffer stops growing at cap+1 elements — so the frequency guard and
-    * the member collection are the same pass, a degenerate hot bucket
-    * (boilerplate band key shared by 10⁹ docs at 100 TB) costs O(cap)
-    * memory and comes back NULL, and in-bucket pairs fall out of a bounded
-    * array expansion (≤ cap(cap-1)/2 per bucket) instead of a self-join.
-    * The previous shape (count keys → join survivors back → self-join) did
-    * the same work in three shuffles and two scans of the band rows. Sorted
-    * member lists + slice-after-self yield each unordered pair exactly once
-    * with doc_a < doc_b. */
+    * Bucket key: the doc's masked minimum `_m` (see [[maskedHash]]). The
+    * oracle's band keys are injective in `_m`, so they define the same
+    * buckets, the same cap exclusions and the same pairs, from one row
+    * per doc instead of [[Bands]].
+    *
+    * ONE aggregation pass per bucket gathers the member list with
+    * [[graft.sql.CollectCapped]], whose buffer stops growing at cap+1
+    * elements — so the frequency guard and the member collection are the
+    * same pass, a degenerate hot bucket (boilerplate shared by 10⁹ docs at
+    * 100 TB) costs O(cap) memory and comes back NULL, and in-bucket pairs
+    * fall out of a bounded array expansion (≤ cap(cap-1)/2 per bucket)
+    * instead of a self-join. Each doc sits in exactly one bucket and member
+    * lists come back sorted, so slice-after-self yields each unordered pair
+    * exactly once with doc_a < doc_b. */
   def lshCandidates(sh: DataFrame, idCol: String,
-                    bucketCap: Int = BandBucketCap): DataFrame = {
-    val sig = minhashSignatures(sh, idCol)
-    bucketsToPairs(bandRowsOfSignatures(sig, idCol), idCol, bucketCap)
-  }
-
-  /** (idCol, band, key) rows from a signature table (one row per doc with
-    * columns s0..s{k-1}). */
-  private def bandRowsOfSignatures(sig: DataFrame, idCol: String): DataFrame = {
-    val rowsPerBand = MinhashK / Bands
-    val bandKey = (b: Int) => concat_ws("_",
-      (0 until rowsPerBand).map(r => col(s"s${b * rowsPerBand + r}").cast("string")): _*)
-    sig.select(col(idCol),
-      explode(array((0 until Bands).map(b =>
-        struct(lit(b).as("band"), bandKey(b).as("key"))): _*)).as("bk"))
-      .select(col(idCol), col("bk.band").as("band"), col("bk.key").as("key"))
-  }
-
-  /** Shared bucket → unordered-pair expansion (see [[lshCandidates]]). */
-  private def bucketsToPairs(bands: DataFrame, idCol: String, bucketCap: Int): DataFrame = {
-    val buckets = bands.groupBy("band", "key")
+                    bucketCap: Int = BandBucketCap): DataFrame =
+    sh.groupBy(col(idCol)).agg(min(maskedHash(col("sh"))).as("_m"))
+      .groupBy("_m")
       .agg(graft.sql.functions.collect_capped(col(idCol), bucketCap).as("ids"))
       .where(col("ids").isNotNull && size(col("ids")) >= 2)
-    buckets
       .select(posexplode(col("ids")).as(Seq("_i", "doc_a")), col("ids"))
       .select(col("doc_a"),
         explode(slice(col("ids"), col("_i") + lit(2), lit(bucketCap))).as("doc_b"))
-      .distinct()
-  }
-
 
   /** MinHash + LSH near-duplicate pairs with exact-jaccard verification.
-    * Scale path: signatures explode into (band_idx, band_key) rows and
-    * candidates come from an equi-join on the band key — a plain shuffle
-    * hash join, no O(n²) compare (see [[lshCandidates]] for the bucket-size
-    * guard). Exact jaccard then filters candidates.
+    * Scale path: candidates come from the masked-minimum buckets of
+    * [[lshCandidates]] (one row per doc, capped member lists, no O(n²)
+    * compare); exact jaccard then filters them.
     * Output: (doc_a, doc_b, inter, n_a, n_b, jaccard). */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       threshold: Double = JaccardThreshold,
                       bucketCap: Int = BandBucketCap): DataFrame = {
     // DISK_ONLY, not MEMORY_AND_DISK: the exploded (doc, shingle) set is
     // ~n_tokens rows per doc (≈10× the corpus in row count, comparable in
-    // bytes) and is consumed 3× (signatures, counts, intersection). At
+    // bytes) and is consumed 3× (bucket keys, counts, intersection). At
     // 100 TB of documents the shingle set is another ~100 TB — memory
     // caching would evict/thrash every executor; serialized disk blocks
     // cost one local write + three sequential local reads, no recompute

@@ -107,6 +107,40 @@ class EngineOpsSpec extends AnyFunSuite {
     assert(batch.count() > 0)
   }
 
+  test("stream source: a directory streams the same rows by plain path and file:// URI") {
+    val dir = java.nio.file.Files.createTempDirectory("stream_uri").toString
+    spark.read.parquet(s"$sf/events.parquet").coalesce(1).write.parquet(s"$dir/in")
+    val plain = StreamOps.streamedWindowAgg(spark, s"$dir/in")
+    val uri = StreamOps.streamedWindowAgg(spark, s"file://$dir/in")
+    assert(plain.count() > 0)
+    assert(uri.exceptAll(plain).isEmpty && plain.exceptAll(uri).isEmpty,
+      s"plain=${plain.count()} uri=${uri.count()}")
+  }
+
+  test("stream source schema: rewriting a file invalidates the cache entry for its path") {
+    val dir = java.nio.file.Files.createTempDirectory("stream_schema").toString
+    val src = s"$dir/in"
+    val ev = spark.read.parquet(s"$sf/events.parquet").select($"event_id", $"ts")
+    ev.coalesce(1).write.parquet(src)
+    assert(StreamOps.sourceSchema(spark, src).fieldNames.toSeq == Seq("event_id", "ts"))
+    // rewrite with one more column, then put the directory's mtime back:
+    // only the files' own mtimes show the change
+    val dirMtime = java.nio.file.Files.getLastModifiedTime(java.nio.file.Paths.get(src))
+    Thread.sleep(50)
+    ev.withColumn("extra", lit(1)).coalesce(1).write.mode("overwrite").parquet(src)
+    java.nio.file.Files.setLastModifiedTime(java.nio.file.Paths.get(src), dirMtime)
+    assert(StreamOps.sourceSchema(spark, src).fieldNames.toSeq == Seq("event_id", "ts", "extra"))
+    assert(StreamOps.schemaCache.get(src)._2.fieldNames.toSeq == Seq("event_id", "ts", "extra"),
+      "the stale entry must be replaced, not kept beside the new one")
+  }
+
+  test("annIvf: fewer centroid ids than nCentroids is a clear IllegalArgumentException") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet").where($"vec_id" < 5)
+    val e = intercept[IllegalArgumentException](
+      AnnOps.annIvf(emb, "vec_id", "embedding", 64, 1, 3, nCentroids = 8))
+    assert(e.getMessage.contains("8") && e.getMessage.contains("found 5"), e.getMessage)
+  }
+
   test("watermarked append-mode window agg == batch windows closed by the final watermark") {
     val streamed = StreamOps.streamedWatermarkAgg(spark, s"$sf/events.parquet", "2 hours")
     val ev = spark.read.parquet(s"$sf/events.parquet")
@@ -330,16 +364,16 @@ class EngineOpsSpec extends AnyFunSuite {
     // near-dup bucket: members arm the TTL; a muted bucket keeps its TTL
     // (so it eventually expires instead of living forever); expiry drops it
     val b1 = state[StreamOps.BucketState](None)
-    val pairs = StreamOps.nearDupHandler(50, ttl)((0, "k"),
-      Iterator((0, "k", 2L), (0, "k", 5L)), b1).toSeq
+    val pairs = StreamOps.nearDupHandler(50, ttl)(42L,
+      Iterator((42L, 2L), (42L, 5L)), b1).toSeq
     assert(pairs == Seq(StreamOps.NearDupCand(2L, 5L)))
     assert(b1.getTimeoutTimestampMs.isPresent)
     val b2 = state[StreamOps.BucketState](Some(StreamOps.BucketState(alive = false, Nil)))
-    assert(StreamOps.nearDupHandler(50, ttl)((0, "k"), Iterator((0, "k", 9L)), b2).isEmpty)
+    assert(StreamOps.nearDupHandler(50, ttl)(42L, Iterator((42L, 9L)), b2).isEmpty)
     assert(b2.getTimeoutTimestampMs.isPresent, "muted bucket must still expire")
     val b3 = state[StreamOps.BucketState](
       Some(StreamOps.BucketState(alive = true, List(2L, 5L))), timedOut = true)
-    assert(StreamOps.nearDupHandler(50, ttl)((0, "k"), Iterator.empty, b3).isEmpty)
+    assert(StreamOps.nearDupHandler(50, ttl)(42L, Iterator.empty, b3).isEmpty)
     assert(b3.isRemoved)
     // and with NO ttl, no timeout is ever armed (NoTimeout contract)
     val s5 = TestGroupState.create[Boolean](Optional.absent[Boolean](),
@@ -352,8 +386,8 @@ class EngineOpsSpec extends AnyFunSuite {
     // only the genuinely new id pairs against the stored members
     val b4 = state[StreamOps.BucketState](
       Some(StreamOps.BucketState(alive = true, List(2L, 5L))))
-    val rePairs = StreamOps.nearDupHandler(50, ttl)((0, "k"),
-      Iterator((0, "k", 2L), (0, "k", 7L)), b4).toSeq
+    val rePairs = StreamOps.nearDupHandler(50, ttl)(42L,
+      Iterator((42L, 2L), (42L, 7L)), b4).toSeq
     assert(rePairs.toSet == Set(StreamOps.NearDupCand(2L, 7L), StreamOps.NearDupCand(5L, 7L)),
       s"re-arrival must not self-pair or re-pair: $rePairs")
     assert(b4.get.members == List(2L, 5L, 7L), b4.get.members.toString)

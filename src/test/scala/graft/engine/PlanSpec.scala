@@ -622,6 +622,30 @@ class PlanSpec extends AnyFunSuite {
     assert(df.count() > 0)
   }
 
+  test("q32 LSH candidates: one BIGINT bucket key, no band rows, no pair-dedup aggregate") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec}
+    import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
+    val sh = TextOps.shingleSet(spark.read.parquet(s"$sf/documents.parquet"), "doc_id", "text")
+    // operators, not Exchange counts: those depend on the input size and
+    // the session's settings, the operators before exchange planning do not
+    val plan = TextOps.lshCandidates(sh, "doc_id").queryExecution.sparkPlan
+    val capped = plan.collect { case a: ObjectHashAggregateExec
+      if a.aggregateExpressions.exists(_.aggregateFunction.prettyName == "collect_capped") => a }
+    assert(capped.nonEmpty, plan.toString)
+    capped.foreach(a => assert(a.groupingExpressions.map(_.dataType) == Seq(LongType), a.toString))
+    val gens = plan.collect { case g: GenerateExec => g }
+    assert(!gens.exists(_.generator.children.exists(_.dataType match {
+      case ArrayType(st: StructType, _) => st.fieldNames.toSeq == Seq("band", "key")
+      case _ => false
+    })), s"band rows are generated:\n$plan")
+    val pairExplode = gens.filter(_.generatorOutput.exists(_.name == "doc_b"))
+    assert(pairExplode.size == 1, plan.toString)
+    val dedup = plan.collect { case a: HashAggregateExec
+      if a.aggregateExpressions.isEmpty && a.exists(pairExplode.contains) => a }
+    assert(dedup.isEmpty, s"pairs are deduplicated by an aggregate:\n$plan")
+  }
+
   test("per-tile agg is a partial+final hash aggregate (map-side combine)") {
     val pts = SpatialOps.withDerivedPosition(
       spark.read.parquet(s"$sf/customer.parquet").select("c_custkey"), "c_custkey")

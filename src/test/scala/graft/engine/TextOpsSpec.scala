@@ -89,6 +89,52 @@ class TextOpsSpec extends AnyFunSuite {
     assert(uncapped > 40000L, s"uncapped candidate count unexpectedly small: $uncapped")
   }
 
+  /** Reference: the oracle's banded construction (per-i signature minima,
+    * Bands string keys), its buckets gathered by collect_capped per
+    * (band, key) and its pairs deduplicated across bands. */
+  def bandedCandidates(sh: org.apache.spark.sql.DataFrame, cap: Int): Set[(Long, Long)] = {
+    import org.apache.spark.sql.functions._
+    val rows = TextOps.MinhashK / TextOps.Bands
+    val mins = (0 until TextOps.MinhashK).map(i =>
+      min(expr(TextOps.affineHashSql("_h", i))).as(s"s$i"))
+    val sig = sh.withColumn("_h", TextOps.hash60(col("sh")))
+      .groupBy("doc_id").agg(mins.head, mins.tail: _*)
+    val key = (b: Int) =>
+      concat_ws("_", (0 until rows).map(r => col(s"s${b * rows + r}").cast("string")): _*)
+    sig.select(col("doc_id"), explode(array((0 until TextOps.Bands).map(b =>
+        struct(lit(b).as("band"), key(b).as("key"))): _*)).as("bk"))
+      .groupBy("bk.band", "bk.key")
+      .agg(graft.sql.functions.collect_capped(col("doc_id"), cap).as("ids"))
+      .where(col("ids").isNotNull && size(col("ids")) >= 2)
+      .select(posexplode(col("ids")).as(Seq("_i", "doc_a")), col("ids"))
+      .select(col("doc_a"), explode(slice(col("ids"), col("_i") + lit(2), lit(cap))).as("doc_b"))
+      .distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+  }
+
+  test("lshCandidates == the 4-band construction, each pair once, at every cap") {
+    import spark.implicits._
+    val n = 300 // boilerplate bucket size: caps n-1 and n straddle it
+    val boiler = ((0L until n.toLong).map(i =>
+      (i, "the same boilerplate header text repeated on every page of the site")) ++ Seq(
+      (1000L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+      (1001L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda")))
+      .toDF("doc_id", "text")
+    val fixtures = Seq(
+      "documents" -> spark.read.parquet(s"$sf/documents.parquet"), "boilerplate" -> boiler)
+    for ((name, docs) <- fixtures; cap <- Seq(2, 50, n - 1, n)) {
+      val sh = TextOps.shingleSet(docs, "doc_id", "text")
+      val got = TextOps.lshCandidates(sh, "doc_id", cap)
+      val pairs = got.as[(Long, Long)].collect().toSet
+      val ref = bandedCandidates(sh, cap)
+      assert(pairs == ref, s"$name cap=$cap: extra=${pairs -- ref} missing=${ref -- pairs}")
+      assert(got.count() == got.distinct().count(), s"$name cap=$cap: a pair is emitted twice")
+    }
+    // the caps are live on the boilerplate bucket: excluded at n-1, kept at n
+    val sh = TextOps.shingleSet(boiler, "doc_id", "text")
+    assert(TextOps.lshCandidates(sh, "doc_id", n - 1).count() == 1)
+    assert(TextOps.lshCandidates(sh, "doc_id", n).count() == 1L + n * (n - 1) / 2)
+  }
+
   test("blockedNearDup: oversized label block is SRP-sub-bucketed, pairs still found") {
     import spark.implicits._
     val dim = 8
